@@ -20,6 +20,7 @@ from .envelope import (
     ENVELOPE_V2_SCHEMA,
     decode_envelopes,
     decode_envelopes_variant,
+    decode_live,
     synthesize_envelopes,
 )
 
@@ -75,13 +76,8 @@ def cdc_filter_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     live ``after`` image (raw_provider_postgres.sql:22
     ``where json_query(_message,'lax $.payload.after') is not null``)."""
     ev = table(spark, sf_dir, "events")
-    decoded = decode_envelopes(synthesize_envelopes(ev))
-    return decoded.filter(F.col("after").isNotNull()).select(
-        "op",
-        F.col("after.event_id").alias("event_id"),
-        F.col("after.user_id").alias("user_id"),
-        F.col("after.event_type").alias("event_type"),
-        F.col("after.value").alias("value"),
+    return decode_live(synthesize_envelopes(ev)).select(
+        "op", "event_id", "user_id", "event_type", "value"
     )
 
 
@@ -292,14 +288,13 @@ def cdc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     projecting op, ts_ms, the live after-image fields, and the source
     table."""
     ev = table(spark, sf_dir, "events")
-    decoded = decode_envelopes(synthesize_envelopes(ev))
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live(synthesize_envelopes(ev)).select(
         "op",
         "ts_ms",
-        F.col("after.event_id").alias("event_id"),
-        F.col("after.user_id").alias("user_id"),
-        F.col("after.event_type").alias("event_type"),
-        F.col("after.value").alias("value"),
+        "event_id",
+        "user_id",
+        "event_type",
+        "value",
         F.col("source.table").alias("src_table"),
     )
 
@@ -386,16 +381,15 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_id") % 4 == 1, F.lit("web")).otherwise(F.lit("mobile")),
     )
     wire = synthesize_envelopes(ev, image_extra={"channel": channel})
-    decoded = decode_envelopes(wire, schema=ENVELOPE_V2_SCHEMA)
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live(wire, schema=ENVELOPE_V2_SCHEMA).select(
         "op",
         "ts_ms",
-        F.col("after.event_id").alias("event_id"),
-        F.col("after.user_id").alias("user_id"),
-        F.col("after.event_type").alias("event_type"),
-        F.col("after.value").alias("value"),
-        F.col("after.channel").alias("channel"),
-        F.col("after.channel").isNotNull().alias("is_post_ddl"),
+        "event_id",
+        "user_id",
+        "event_type",
+        "value",
+        "channel",
+        F.col("channel").isNotNull().alias("is_post_ddl"),
     )
 
 

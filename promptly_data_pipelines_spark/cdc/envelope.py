@@ -270,7 +270,11 @@ def decode_envelopes(
     batch frame and a readStream frame — this is the single decode used
     by both paths. Pass ``schema=ENVELOPE_V2_SCHEMA`` (or any
     envelope_schema_for product) to read a topic across an additive
-    upstream DDL: pre-DDL messages NULL-fill the new field."""
+    upstream DDL: pre-DDL messages NULL-fill the new field.
+
+    For live rows only, use :func:`decode_live`: a tombstone filter
+    on this frame's ``after`` is pushed under the decode and parses
+    every message again."""
     p = F.from_json("raw_message", schema).getField("payload")
     return kafka_like.select(
         p.getField("op").alias("op"),
@@ -279,4 +283,33 @@ def decode_envelopes(
         p.getField("after").alias("after"),
         p.getField("source").alias("source"),
         "kafka_timestamp",
+    )
+
+
+def decode_live(
+    kafka_like: DataFrame, schema: T.StructType = ENVELOPE_SCHEMA
+) -> DataFrame:
+    """Decode + tombstone filter + after-image projection in one pass —
+    the raw model's read of the topic (raw_provider_postgres.sql:22
+    ``where json_query(_message,'lax $.payload.after') is not null``).
+    Yields ``op, ts_ms, <every after-image field>, source,
+    kafka_timestamp`` for live rows only; a Kafka compaction tombstone
+    (null raw_message) decodes to a null payload and is dropped too.
+
+    Parse-once contract: each message runs ``from_json`` exactly once.
+    ``decode_envelopes(...).filter(after IS NOT NULL)`` does not: the
+    optimizer pushes that Filter through the decode projection and
+    inlines the parse (and, over synthesized envelopes, the
+    ``to_json`` that built the message) into the Filter as well as
+    the Project, so every message is serialized and parsed twice or
+    three times. Here the filter runs on the already-parsed payload
+    inside a one-element array that ``inline`` unpacks; a generator
+    is a barrier the Filter cannot be pushed under, and ``inline``
+    over an expression (not an attribute) gives the optimizer no
+    ``size(...) > 0`` predicate to infer and push down either. Pinned
+    by tests/test_plan_quality.py."""
+    payload = F.from_json("raw_message", schema).getField("payload")
+    live = F.filter(F.array(payload), lambda x: x.getField("after").isNotNull())
+    return kafka_like.select(F.inline(live), "kafka_timestamp").select(
+        "op", "ts_ms", "after.*", "source", "kafka_timestamp"
     )

@@ -3,7 +3,7 @@
 The reference's "streaming" is batch-over-Kafka (Trino re-reads the
 topic each run). At 100 TB/day that is untenable — the scale mode is a
 real readStream with incremental state. These functions apply the SAME
-transforms as cdc.batch (decode_envelopes, latest_wins) to streaming
+transforms as cdc.batch (decode_live, latest_wins) to streaming
 DataFrames; tests drive them with a file source + availableNow
 trigger, production would use ``format("kafka")``:
 
@@ -36,7 +36,7 @@ from ..catalog import table
 from ..functions import ts_str
 from ..registry import query
 from .batch import merge_upsert_frames
-from .envelope import decode_envelopes, synthesize_envelopes
+from .envelope import ENVELOPE_SCHEMA, decode_live, synthesize_envelopes
 
 RAW_STREAM_SCHEMA = T.StructType(
     [
@@ -65,19 +65,14 @@ def live_rows(
     and surface the additive ``after.<col>`` fields — pre-DDL
     messages NULL-fill them (cdc_schema_evolution's decode posture,
     reusable by the upsert sink's schema-evolution path)."""
-    decoded = (
-        decode_envelopes(stream)
-        if schema is None
-        else decode_envelopes(stream, schema=schema)
-    )
-    return decoded.filter(F.col("after").isNotNull()).select(
+    return decode_live(stream, schema or ENVELOPE_SCHEMA).select(
         "op",
         F.timestamp_millis("ts_ms").alias("ts"),
-        F.col("after.event_id").alias("event_id"),
-        F.col("after.user_id").alias("user_id"),
-        F.col("after.event_type").alias("event_type"),
-        F.col("after.value").alias("value"),
-        *[F.col(f"after.{c}").alias(c) for c in extra_image_cols],
+        "event_id",
+        "user_id",
+        "event_type",
+        "value",
+        *extra_image_cols,
     )
 
 

@@ -17,19 +17,43 @@ acceptance test asserts, test_dbt.py:161-177).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..cdc.envelope import decode_envelopes, synthesize_envelopes
+from ..cdc.envelope import decode_live, synthesize_envelopes
 from ..cdc.batch import latest_wins
 from ..functions import date_key
 from ..quality.checks import not_null_check, relationships_check, run_suite, table_metrics, unique_check
 from ..quality.report import write_report
 from ..registry import query
 from .orchestrator import Pipeline
+
+
+def stage_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The raw_events model's frame before its write: live CDC rows
+    with their ``ingestion_cdc_date`` partition key.
+
+    The events source is hash-partitioned on event_id into
+    ``defaultParallelism`` partitions first — the role of a topic's
+    key → partition mapping (as in ``synthesize_kafka_frames``), so
+    envelope encode/decode runs on every core instead of one task per
+    input row group. The count is explicit because AQE would coalesce
+    the small shuffle back to one or two tasks."""
+    events = table(spark, sf_dir, "events").repartition(
+        spark.sparkContext.defaultParallelism, "event_id"
+    )
+    live = decode_live(synthesize_envelopes(events)).select(
+        "event_id",
+        F.timestamp_millis("ts_ms").alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+    )
+    return live.withColumn("ingestion_cdc_date", date_key("ts"))
 
 
 def run_elt(spark: SparkSession, sf_dir: str, warehouse: str, parallel: bool = True) -> dict:
@@ -40,16 +64,8 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str, parallel: bool = T
 
     @p.model("raw_events")
     def raw_events(s: SparkSession, up: dict[str, DataFrame]) -> DataFrame:
-        decoded = decode_envelopes(synthesize_envelopes(table(s, sf_dir, "events")))
-        live = decoded.filter(F.col("after").isNotNull()).select(
-            F.col("after.event_id").alias("event_id"),
-            F.timestamp_millis("ts_ms").alias("ts"),
-            F.col("after.user_id").alias("user_id"),
-            F.col("after.event_type").alias("event_type"),
-            F.col("after.value").alias("value"),
-        )
         out = os.path.join(warehouse, "raw", "events")
-        staged = live.withColumn("ingestion_cdc_date", date_key("ts"))
+        staged = stage_raw_events(s, sf_dir)
         staged.repartition("ingestion_cdc_date").write.mode("overwrite").partitionBy(
             "ingestion_cdc_date"
         ).parquet(out)
@@ -110,10 +126,14 @@ def run_elt(spark: SparkSession, sf_dir: str, warehouse: str, parallel: bool = T
         {"curated_activity": table_metrics(curated, "ts", "user_id")},
         os.path.join(warehouse, "report"),
     )
+    # the suite was evaluated once, by write_report: read its verdict
+    # back instead of running the checks' jobs a second time
+    with open(paths["json"]) as f:
+        passed = json.load(f)["passed"]
     return {
         "counts": {name: df.count() for name, df in results.items()},
         "report": paths,
-        "passed": all(r.passed for r in suite.collect()),
+        "passed": passed,
         # the product itself (a lazy read over the warehouse with the
         # model's own schema) — callers must not re-derive the curated
         # schema by hand; a hand-copied DDL silently reads stale

@@ -6,9 +6,11 @@ profiles.yml:21); dbt resolves ``ref()`` calls into a model DAG
 (curated_provider.sql:52,67). Here: models are Python functions
 returning DataFrames, dependencies are declared, execution is a
 topological sort with fail-fast — one process, no subprocess
-boundaries. Independent models could run concurrently (the reference
-cannot: threads=1); kept sequential for deterministic logs, flagged
-for the cluster deployment.
+boundaries. ``run`` is sequential by default; ``run(parallel=True)``
+(what ``elt_job.run_elt`` uses) runs each topo level's independent
+models concurrently, which the reference cannot (threads=1). Level
+models inherit the caller's job group and description, so a
+``cancelJobGroup`` on the caller's group stops them too.
 """
 
 from __future__ import annotations
@@ -105,6 +107,8 @@ class Pipeline:
     def _run_parallel(self, spark: SparkSession) -> dict[str, DataFrame]:
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         results: dict[str, DataFrame] = {}
         for group in self._topo_levels():
             log.info("running level: %s", group)
@@ -117,9 +121,17 @@ class Pipeline:
             # cap the pool: a 100-model level would spawn 100 threads all
             # submitting Spark jobs at once — past ~8 concurrent jobs the
             # local scheduler is saturated and extra threads only cost
-            # driver memory
+            # driver memory. Each target is wrapped per model: the wrapper
+            # copies the caller's local properties (job group,
+            # description) when it is made, so every model gets its own
+            # copy and a model's setJobGroup never leaks into a sibling
             with ThreadPoolExecutor(max_workers=max(1, min(8, len(group)))) as ex:
-                for name, df in ex.map(run_one, group):
+                futures = [
+                    ex.submit(inheritable_thread_target(spark)(run_one), name)
+                    for name in group
+                ]
+                for fut in futures:
+                    name, df = fut.result()
                     df.createOrReplaceTempView(name)
                     results[name] = df
         return results

@@ -105,6 +105,41 @@ def test_orchestrator_parallel_matches_sequential(spark):
     assert sorted(r.k for r in seq) == sorted(r.k for r in par) == list(range(5))
 
 
+def test_orchestrator_parallel_models_inherit_job_group(spark):
+    """Level models run on pool threads: their jobs must carry the
+    caller's job group, or cancelJobGroup cannot stop a run and its
+    jobs are attributed to no one."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = "orchestrator-inherit-test"
+    seen: dict[str, str | None] = {}
+
+    def counted(name: str, n: int):
+        def fn(s, up):
+            seen[name] = s.sparkContext.getLocalProperty("spark.jobGroup.id")
+            df = s.range(n)
+            df.count()
+            return df
+
+        return fn
+
+    p = Pipeline()
+    p.model("a")(counted("a", 10))
+    p.model("b")(counted("b", 5))
+    ungrouped_before = set(st.getJobIdsForGroup())
+    sc.setJobGroup(group, "orchestrator inherit test")
+    try:
+        p.run(spark, parallel=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert seen == {"a": group, "b": group}
+    # both models ran at least one job each, all of them in the group
+    assert len(st.getJobIdsForGroup(group)) >= 2
+    assert set(st.getJobIdsForGroup()) - ungrouped_before == set()
+
+
 def test_dq_report(spark, tmp_path):
     from promptly_data_pipelines_spark.quality.checks import table_metrics
     from promptly_data_pipelines_spark.quality.report import write_report

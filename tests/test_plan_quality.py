@@ -17,11 +17,15 @@ from conftest import SF_DIR
 QUERIES = {**all_queries(), **local_only_queries()}
 
 
-def _plan(spark, name: str) -> str:
+def _formatted(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        QUERIES[name](spark, SF_DIR).explain("formatted")
+        df.explain("formatted")
     return buf.getvalue()
+
+
+def _plan(spark, name: str) -> str:
+    return _formatted(QUERIES[name](spark, SF_DIR))
 
 
 def test_scan_pushdown(spark):
@@ -248,6 +252,29 @@ def test_explode_heavy_exprs_not_recomputed_below_exchange(spark):
                     raise AssertionError(
                         f"{name}: heavy expression re-evaluated in a Filter node:\n{block[:500]}"
                     )
+
+
+def test_cdc_decode_parses_each_message_once(spark):
+    """The tombstone filter must run on the already-parsed payload. A
+    Filter(after IS NOT NULL) above the decode projection is pushed
+    under it and the optimizer inlines from_json(to_json(...)) into
+    the Filter as well as the Project, so each message is serialized
+    twice and parsed three times (measured ~2x the raw_events stage).
+    Pins: no Filter node parses or serializes JSON, and the plan
+    holds exactly one from_json and one to_json."""
+    from promptly_data_pipelines_spark.pipelines.elt_job import stage_raw_events
+
+    plans = {name: _plan(spark, name) for name in ("cdc_parse", "cdc_filter_tombstone")}
+    plans["raw_events staging"] = _formatted(stage_raw_events(spark, SF_DIR))
+    for name, p in plans.items():
+        details = p.split("\n\n", 1)[1] if "\n\n" in p else p
+        for block in details.split("\n\n"):
+            if block.startswith("(") and "Filter" in block.split("\n")[0]:
+                assert "from_json" not in block and "StructsToJson" not in block, (
+                    f"{name}: JSON work re-evaluated in a Filter node:\n{block[:500]}"
+                )
+        assert p.count("from_json(") == 1, f"{name}: from_json evaluated {p.count('from_json(')}x:\n{p}"
+        assert p.count("StructsToJson") == 1, f"{name}: to_json evaluated {p.count('StructsToJson')}x:\n{p}"
 
 
 def test_text_repetition_single_scan_no_joins(spark):
